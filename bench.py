@@ -279,7 +279,8 @@ ACCEPTED_REGRESSIONS = {
 def compact_line(
     timings: dict[str, float],
     sf: float,
-    prev_queries: dict[str, float] | None = None,
+    prev: dict | None = None,
+    nproc: int | None = None,
 ) -> str:
     """The stdout summary line (VERDICT r10 #3): the driver tail-
     captures a bounded (~2000-char) window and the full per-query map
@@ -294,7 +295,10 @@ def compact_line(
     top-5 stdout windows (n_common collapsed to 1 in r12), so the
     harness computes the full-common-set geomean speedup against the
     per-query map of whatever BENCH_local.json it found on disk at
-    start — still ONE bounded JSON line."""
+    start (``prev``) — still ONE bounded JSON line.  Only a previous
+    artifact of the same ``sf`` and ``nproc`` counts: anything else
+    (another scale factor, another box, an artifact without
+    ``nproc``) gives ``geomean_vs_prev: null``, ``n_common_prev: 0``."""
     import hashlib
     import math
 
@@ -306,10 +310,17 @@ def compact_line(
             {k: timings[k] for k in sorted(timings)}, separators=(",", ":")
         ).encode()
     ).hexdigest()
+    same_box = (
+        prev is not None
+        and nproc is not None
+        and prev.get("sf") == sf
+        and prev.get("nproc") == nproc
+    )
+    prev_queries = (prev.get("queries") or {}) if same_box else {}
     common = {
         k: prev_queries[k] / v
         for k, v in timings.items()
-        if prev_queries and prev_queries.get(k) and v > 0
+        if prev_queries.get(k) and v > 0
     }
     geo = (
         round(
@@ -338,6 +349,9 @@ def compact_line(
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf") or "0.1")
+    # CPUs this process may run on (what `nproc` prints): timings from
+    # boxes of another width are not comparable (compact_line).
+    nproc = len(os.sched_getaffinity(0))
     spark = get_spark(app_name="engine-bench")
 
     # JVM/codegen warmup + one touch per table so the first measured
@@ -453,17 +467,16 @@ def main() -> None:
     OWN_KEYS = {"metric", "value", "unit", "queries", "spread", "reps",
                 "reruns", "sf", "accepted_regressions", "cluster_build_sec",
                 "kmeans_train_sec", "lsh_index_build_sec",
-                "stream_shuffle_partitions", "consumes"}
+                "stream_shuffle_partitions", "consumes", "nproc"}
     preserved: dict = {}
-    prev_queries: dict = {}
+    prev = None
     if os.path.exists(out_path):
         try:
             with open(out_path) as f:
                 prev = json.load(f)
             preserved = {k: v for k, v in prev.items() if k not in OWN_KEYS}
-            prev_queries = prev.get("queries") or {}
         except (json.JSONDecodeError, OSError):
-            preserved = {}
+            prev, preserved = None, {}
     full = json.dumps(
         {
             **preserved,
@@ -481,11 +494,12 @@ def main() -> None:
             "consumes": CONSUMES,
             "stream_shuffle_partitions": stream_width,
             "sf": sf,
+            "nproc": nproc,
         }
     )
     with open(out_path, "w") as f:
         f.write(full + "\n")
-    print(compact_line(timings, sf, prev_queries), flush=True)
+    print(compact_line(timings, sf, prev, nproc), flush=True)
 
 
 if __name__ == "__main__":

@@ -3,8 +3,14 @@
 The reference's schema system is compile-time case classes
 (Pageview.scala:8-11, WindowAggregate.scala:8-12); we mirror that with
 explicit StructTypes — never ``inferSchema``.  Parquet files carry their
-own (authoritative) schema; these structs document the contract and are
-used to validate loads and to construct synthetic frames in tests.
+own (authoritative) schema, and ``sources/tables.load_table`` reads with
+it: ``TABLE_SCHEMAS`` is not used to validate or pin loads.  These
+structs name the tables (``TABLES``) and document their columns; tests
+use them as the declared schema of CSV/JSON round trips.  Their
+timestamp types are not the files': they declare ``TimestampType`` for
+``events.ts``, ``lineitem.l_shipdate`` and ``orders.o_orderdate``,
+which the parquet test data stores without a zone, so those columns
+load as ``TimestampNTZType``.
 """
 
 from __future__ import annotations

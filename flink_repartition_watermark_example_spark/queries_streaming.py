@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_repartition_watermark_example_spark.queries import register, register_extra
-from flink_repartition_watermark_example_spark.sources.tables import load_table
+from flink_repartition_watermark_example_spark.sources.tables import raw_table_schema
 
 # Sentinel event times and the cutoff that excludes them from
 # aggregation while still letting them advance the watermark.  The
@@ -178,10 +178,19 @@ def stream_shuffle_width() -> int:
     overhead.  At 100 TB this default is WRONG on purpose-visible
     grounds: it exists only for bounded local replays; deployments
     must set the env var (or size shuffle.partitions themselves)
-    to key cardinality."""
+    to key cardinality.  A set value must be a positive integer;
+    anything else raises ``ValueError`` naming the variable."""
     env = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE")
-    if env:
-        return max(1, int(env))
+    if env is not None:
+        try:
+            width = int(env)
+        except ValueError:
+            width = 0
+        if width <= 0:
+            raise ValueError(
+                f"SPARK_GRAFT_STREAM_SHUFFLE must be a positive integer, got {env!r}"
+            )
+        return width
     from flink_repartition_watermark_example_spark.session import (
         _default_parallelism,
     )
@@ -263,9 +272,8 @@ def _drain(agg: DataFrame, spark: SparkSession, name: str, mode: str) -> DataFra
     "must equal the batch GROUP BY.",
 )
 def q_streaming_windowed_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events")  # sets the nanosAsLong conf
     name = "stream_wc_" + uuid.uuid4().hex[:8]
-    raw_schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    raw_schema = raw_table_schema(spark, sf_dir, "events")
     # SPARK_GRAFT_STREAM_FPT batches k files per micro-batch: at sf100
     # the events table is ~250 part files, and with k=1 the drain is
     # linear in BATCH COUNT (per-trigger state commit + planning
@@ -326,9 +334,8 @@ def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         interval_join_views_purchases,
     )
 
-    load_table(spark, sf_dir, "events")  # sets the nanosAsLong conf
     name = "stream_ij_" + uuid.uuid4().hex[:8]
-    raw_schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    raw_schema = raw_table_schema(spark, sf_dir, "events")
 
     src = os.path.join(sf_dir, "events.parquet")
     # pathGlobFilter matches leaf FILES: a directory-shaped table's
@@ -377,9 +384,8 @@ def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_repartition_watermark_example_spark.streaming.stateful import sessionize
 
-    load_table(spark, sf_dir, "events")  # sets the nanosAsLong conf
     name = "stream_sess_" + uuid.uuid4().hex[:8]
-    raw_schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    raw_schema = raw_table_schema(spark, sf_dir, "events")
     replay = _replay_dir(spark, sf_dir, raw_schema)
     try:
         stream = _event_ts(
@@ -419,9 +425,8 @@ def q_streaming_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFra
         interval_join_left_outer,
     )
 
-    load_table(spark, sf_dir, "events")  # sets the nanosAsLong conf
     name = "stream_ijo_" + uuid.uuid4().hex[:8]
-    raw_schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    raw_schema = raw_table_schema(spark, sf_dir, "events")
     # One replay dir PER SIDE: two readStreams over one identical path
     # share file-source bookkeeping, which left one side's watermark
     # stuck at its data max — separate dirs make the two sources (and
@@ -470,9 +475,8 @@ def q_streaming_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFra
 def q_streaming_dedup_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_repartition_watermark_example_spark.streaming.dedup import dedup_stream
 
-    load_table(spark, sf_dir, "events")  # sets the nanosAsLong conf
     name = "stream_dd_" + uuid.uuid4().hex[:8]
-    raw_schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    raw_schema = raw_table_schema(spark, sf_dir, "events")
     src = os.path.join(sf_dir, "events.parquet")
     base, glob = (
         (src, "*.parquet") if os.path.isdir(src) else (sf_dir, "events.parquet")
@@ -505,9 +509,8 @@ def q_streaming_sessionize_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     doesn't, mirroring the Kafka-source gating."""
     from flink_repartition_watermark_example_spark.streaming.tws import sessionize_tws
 
-    load_table(spark, sf_dir, "events")  # sets the nanosAsLong conf
     name = "stream_tws_" + uuid.uuid4().hex[:8]
-    raw_schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    raw_schema = raw_table_schema(spark, sf_dir, "events")
     replay = _replay_dir(spark, sf_dir, raw_schema)
     try:
         stream = _event_ts(

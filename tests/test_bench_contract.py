@@ -8,6 +8,8 @@ from __future__ import annotations
 
 import json
 
+import pytest
+
 import bench
 
 
@@ -53,19 +55,28 @@ def test_compact_line_geomean_vs_prev():
     # bounded line — geomean speedup over the full common set of the
     # previous artifact's per-query map
     t = {"a": 1.0, "b": 2.0, "c": 4.0}
-    prev = {"a": 2.0, "b": 2.0, "d": 9.0}
-    d = json.loads(bench.compact_line(t, 0.1, prev))
+    prev = {"sf": 0.1, "nproc": 4, "queries": {"a": 2.0, "b": 2.0, "d": 9.0}}
+    d = json.loads(bench.compact_line(t, 0.1, prev, nproc=4))
     assert d["n_common_prev"] == 2  # a and b; d not in this run
     # speedups: a 2.0/1.0=2.0, b 1.0 -> geomean sqrt(2)
     assert abs(d["geomean_vs_prev"] - 1.414) < 0.001
     # no previous artifact -> nulls, line still parses
-    d0 = json.loads(bench.compact_line(t, 0.1, None))
+    d0 = json.loads(bench.compact_line(t, 0.1, None, nproc=4))
     assert d0["geomean_vs_prev"] is None and d0["n_common_prev"] == 0
+    # another scale factor, another box width, or an artifact that
+    # does not record its width -> not comparable, nulls
+    for other in (
+        {**prev, "sf": 1.0},
+        {**prev, "nproc": 32},
+        {k: v for k, v in prev.items() if k != "nproc"},
+    ):
+        dx = json.loads(bench.compact_line(t, 0.1, other, nproc=4))
+        assert dx["geomean_vs_prev"] is None and dx["n_common_prev"] == 0, other
     # the length pin covers the new fields at full registry size
-    line = bench.compact_line(
-        _fake_timings(), 0.1, {n: 123.4567 for n in _fake_timings()}
-    )
+    full = {"sf": 0.1, "nproc": 4, "queries": {n: 123.4567 for n in _fake_timings()}}
+    line = bench.compact_line(_fake_timings(), 0.1, full, nproc=4)
     assert len(line) < 1500 and "\n" not in line
+    assert json.loads(line)["n_common_prev"] == len(_fake_timings())
 
 
 def test_consumes_map_names_benched_queries_and_build_keys():
@@ -97,6 +108,19 @@ def test_stream_shuffle_width_env_override(monkeypatch):
     assert stream_shuffle_width() == 2
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "64")
     assert stream_shuffle_width() == 8  # clamped
+
+
+@pytest.mark.parametrize("value", ["", " ", "8.0", "x", "0", "-3"])
+def test_stream_shuffle_width_rejects_invalid_env(monkeypatch, value):
+    # ADVICE #5: "" used to fall back to the default and "0" to width
+    # 1; a set value that is not a positive integer fails loudly
+    from flink_repartition_watermark_example_spark.queries_streaming import (
+        stream_shuffle_width,
+    )
+
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE", value)
+    with pytest.raises(ValueError, match="SPARK_GRAFT_STREAM_SHUFFLE"):
+        stream_shuffle_width()
 
 
 def test_accepted_regressions_are_recorded():

@@ -3,14 +3,23 @@
 from __future__ import annotations
 
 import glob
+import os
+import shutil
+import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from flink_repartition_watermark_example_spark.scale import salted_agg
 from flink_repartition_watermark_example_spark.sinks import write_parquet_partitioned
 from flink_repartition_watermark_example_spark.sources.files import read_csv, read_jsonl
-from flink_repartition_watermark_example_spark.sources.tables import load_table
-from flink_repartition_watermark_example_spark.datamodel import TABLE_SCHEMAS
+from flink_repartition_watermark_example_spark.sources.tables import (
+    load_table,
+    raw_table_schema,
+)
+from flink_repartition_watermark_example_spark.datamodel import TABLE_SCHEMAS, TABLES
 
 
 def test_csv_roundtrip(spark, sf_dir, tmp_path):
@@ -181,3 +190,90 @@ def test_avro_gate_follows_jvm_registry(spark, tmp_path):
 
         with _pytest.raises(RuntimeError, match="spark-avro"):
             write_table(df, path, fmt="avro")
+
+
+# --- parquet schema memo (sources/tables.py) ------------------------------
+
+
+def _jobs_fired(spark, fn) -> int:
+    """Number of Spark jobs ``fn()`` fires, counted by job group."""
+    sc = spark.sparkContext
+    group = "schema-memo-" + uuid.uuid4().hex
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_second_load_of_a_file_fires_no_spark_job(spark, sf_dir, tmp_path):
+    shutil.copy(os.path.join(sf_dir, "orders.parquet"), tmp_path)
+    d = str(tmp_path)
+    assert _jobs_fired(spark, lambda: load_table(spark, d, "orders")) >= 1
+    # the schema is reused: no inference job, same schema and rows
+    assert _jobs_fired(spark, lambda: load_table(spark, d, "orders")) == 0
+    again = load_table(spark, d, "orders")
+    fresh = spark.read.parquet(os.path.join(d, "orders.parquet"))
+    assert again.schema == fresh.schema
+    assert sorted(map(tuple, again.collect())) == sorted(
+        map(tuple, fresh.collect())
+    )
+
+
+def test_rewritten_file_is_inferred_again(spark, tmp_path):
+    d = str(tmp_path)
+    p = os.path.join(d, "region.parquet")
+    names = ["A", "B", "C"]
+    keys = pa.array([0, 1, 2], pa.int32())
+    pq.write_table(pa.table({"r_regionkey": keys, "r_name": names}), p)
+    first = load_table(spark, d, "region")
+    assert first.schema["r_regionkey"].dataType == T.IntegerType()
+    size = os.path.getsize(p)
+    # same path, same inode (written in place), another column type
+    keys = ["zero", "one", "two"]
+    pq.write_table(pa.table({"r_regionkey": keys, "r_name": names}), p)
+    assert os.path.getsize(p) != size  # the stamp must see the rewrite
+    back = load_table(spark, d, "region")
+    assert back.schema["r_regionkey"].dataType == T.StringType()
+    assert sorted(r.r_regionkey for r in back.collect()) == ["one", "two", "zero"]
+
+
+def test_memoized_schemas_equal_fresh_inference(spark, sf_dir):
+    ntz = set()
+    for name in TABLES:
+        memo = raw_table_schema(spark, sf_dir, name)
+        fresh = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet")).schema
+        assert memo == fresh, name
+        assert load_table(spark, sf_dir, name).schema == fresh, name
+        ntz |= {(name, f.name) for f in fresh if f.dataType == T.TimestampNTZType()}
+    assert ntz == {
+        ("events", "ts"),
+        ("lineitem", "l_shipdate"),
+        ("orders", "o_orderdate"),
+    }
+
+
+def test_nanos_events_reuse_the_long_schema_and_rescale(spark, tmp_path):
+    # the older events encoding: int64 TIMESTAMP(NANOS), read as long
+    d = str(tmp_path)
+    ts = pa.array(
+        [1_704_067_200_123_456_789, 1_704_070_800_000_001_000], pa.timestamp("ns")
+    )
+    cols = {
+        "event_id": [1, 2],
+        "ts": ts,
+        "user_id": [7, 8],
+        "event_type": ["view", "buy"],
+        "value": [1.0, 2.0],
+        "props": ["", ""],
+    }
+    pq.write_table(pa.table(cols), os.path.join(d, "events.parquet"))
+    assert raw_table_schema(spark, d, "events")["ts"].dataType == T.LongType()
+    first = load_table(spark, d, "events").orderBy("event_id").collect()
+    assert _jobs_fired(spark, lambda: load_table(spark, d, "events")) == 0
+    second = load_table(spark, d, "events")
+    assert second.schema["ts"].dataType == T.TimestampType()
+    assert second.orderBy("event_id").collect() == first
+    assert [r.ts.microsecond for r in first] == [123456, 1]

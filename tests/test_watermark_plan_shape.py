@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from flink_repartition_watermark_example_spark.plans.introspect import (
     watermark_shapes,
 )
-from flink_repartition_watermark_example_spark.sources.tables import load_table
+from flink_repartition_watermark_example_spark.sources.tables import raw_table_schema
 from flink_repartition_watermark_example_spark.streaming.eventtime import (
     ensure_event_time,
 )
@@ -50,9 +50,7 @@ def _side(spark, sf_dir: str, event_type: str) -> DataFrame:
     """The exact per-side construction of q_streaming_interval_join:
     raw file stream -> event-time normalization -> event_type filter
     (the filter lands below the watermark added inside the join)."""
-    raw_schema = spark.read.parquet(
-        os.path.join(sf_dir, "events.parquet")
-    ).schema
+    raw_schema = raw_table_schema(spark, sf_dir, "events")
     raw = spark.readStream.schema(raw_schema).parquet(
         os.path.join(sf_dir, "events.parquet")
     )
@@ -98,7 +96,6 @@ def _assert_sentinel_safe(
 
 
 def test_interval_join_watermark_filters_are_sentinel_safe(spark, sf_dir):
-    load_table(spark, sf_dir, "events")  # sets the nanosAsLong conf
     joined = interval_join_views_purchases(
         _side(spark, sf_dir, "view"), _side(spark, sf_dir, "purchase")
     )
@@ -108,7 +105,6 @@ def test_interval_join_watermark_filters_are_sentinel_safe(spark, sf_dir):
 def test_left_outer_interval_join_watermark_filters_are_sentinel_safe(
     spark, sf_dir
 ):
-    load_table(spark, sf_dir, "events")
     joined = interval_join_left_outer(
         _side(spark, sf_dir, "view"),
         _side(spark, sf_dir, "purchase"),
