@@ -461,8 +461,9 @@ def main() -> None:
         os.path.dirname(os.path.abspath(__file__)), "BENCH_local.json"
     )
     # Preserve recorder keys other tools merged into the artifact
-    # (scripts/bench_decode_gate.py's decode_pregate A/B row was
-    # clobbered by four subsequent bench runs in round 9) — carry over
+    # (the decode_pregate A/B row, recorded by a since-deleted
+    # one-off script, was clobbered by four subsequent bench runs in
+    # round 9) — carry over
     # every top-level key this harness doesn't own.
     OWN_KEYS = {"metric", "value", "unit", "queries", "spread", "reps",
                 "reruns", "sf", "accepted_regressions", "cluster_build_sec",

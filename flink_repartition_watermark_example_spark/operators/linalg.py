@@ -133,12 +133,16 @@ def _pca_key(emb: DataFrame, dim: int, q: float):
     fingerprints — the kmeans.train discipline; a regenerated dir must
     not serve a stale basis.  None (no memo) for in-memory relations.
 
-    The ANALYZED LOGICAL PLAN hash is part of the key (ADVICE r12 #2):
-    inputFiles alone would let pca_components(emb.where(...)) silently
-    reuse a full-corpus basis fitted earlier over the same files — any
-    filter/projection on the relation must miss the memo and fit its
-    own basis."""
-    import hashlib
+    The ANALYZED LOGICAL PLAN's semantic hash is part of the key
+    (ADVICE r12 #2): inputFiles alone would let
+    pca_components(emb.where(...)) silently reuse a full-corpus basis
+    fitted earlier over the same files — any filter/projection on the
+    relation must miss the memo and fit its own basis.  semanticHash
+    hashes the canonicalized plan (exprIds normalized), so two loads
+    of the IDENTICAL logical query share the memo; a hash of the
+    plan's toString() would not do, because toString() truncates past
+    spark.sql.debug.maxToStringFields and two relations differing only
+    in a late column's expression would collide."""
     import os
 
     files = sorted(emb.inputFiles())
@@ -152,18 +156,10 @@ def _pca_key(emb: DataFrame, dim: int, q: float):
             fps.append((f, st.st_size, st.st_mtime_ns))
         except OSError:
             fps.append((f, None, None))
-    # exprIds (#123) are fresh per read of the same source; strip them
-    # so two loads of the IDENTICAL logical query share the memo while
-    # any added Filter/Project node still changes the key.
-    import re
-
-    plan = re.sub(
-        r"#\d+", "#", emb._jdf.queryExecution().analyzed().toString()
-    )
     return (
         emb.sparkSession.sparkContext.applicationId,
         tuple(fps),
-        hashlib.sha256(plan.encode()).hexdigest()[:16],
+        int(emb._jdf.queryExecution().analyzed().semanticHash()),
         int(dim),
         float(q),
     )

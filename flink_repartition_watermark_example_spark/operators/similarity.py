@@ -414,13 +414,11 @@ def _fold_norm(V):
     return np.sqrt(acc)
 
 
-def _score_pairs(joined: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
+def _score_pairs(joined: DataFrame) -> DataFrame:
     """Shared fold-exact scoring stage: a joined candidate relation
     with (query_id, qv, nqv, vec_id, v, nv) → (query_id, vec_id,
     cos_sim), cos = dot/(nqv·nv) in the expression fold's exact
-    operation order, one Arrow pass, no shuffle.  `carry` names long
-    columns of the input passed through unchanged (e.g. list_id for
-    the diversified variant)."""
+    operation order, one Arrow pass, no shuffle."""
     import numpy as np
     import pandas as pd
 
@@ -433,19 +431,13 @@ def _score_pairs(joined: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
             cos = _fold_dot_rows(Q, V) / (
                 pdf["nqv"].to_numpy() * pdf["nv"].to_numpy()
             )
-            out = {
-                "query_id": pdf["query_id"],
-                "vec_id": pdf["vec_id"],
-                "cos_sim": cos,
-            }
-            for c in carry:
-                out[c] = pdf[c]
-            yield pd.DataFrame(out)
+            yield pd.DataFrame(
+                {"query_id": pdf["query_id"], "vec_id": pdf["vec_id"], "cos_sim": cos}
+            )
 
-    schema = "query_id long, vec_id long, cos_sim double" + "".join(
-        f", {c} long" for c in carry
+    return joined.mapInPandas(
+        batches, schema="query_id long, vec_id long, cos_sim double"
     )
-    return joined.mapInPandas(batches, schema=schema)
 
 
 def _bucketize_fold(vdf: DataFrame, planes: list[list[float]]) -> DataFrame:
@@ -490,6 +482,68 @@ def _centroids(emb: DataFrame, centroid_ids: list[int] | None = None):
     return sorted((r["vec_id"], list(r["v"])) for r in cents)
 
 
+def _assign_lists(V, C, cnorms):
+    """(row norms, index of each row's list) for a corpus batch:
+    argmax first-win over the ascending-cid centroid columns, so an
+    exact tie goes to the smaller centroid id (cos desc, cid asc)."""
+    import numpy as np
+
+    nv = _fold_norm(V)
+    cos = _fold_dot_matrix(V, C) / (nv[:, None] * cnorms[None, :])
+    return nv, np.argmax(cos, axis=1)
+
+
+def _probe_table(emb: DataFrame, num_queries: int):
+    """Driver-side routing of the query batch for the exact IVF paths.
+    ONE collect fetches the CENTROID_IDS rows and the |Q| query rows
+    (vec_id < num_queries, a small batch by contract — see
+    `_collect_queries`); numpy then computes the centroid and query
+    norms and each query's probe rank (1..#lists) of every list in
+    (cos desc, centroid_id asc) order, every double in the expression
+    fold's exact operation order.
+
+    Returns (cids, C, cnorms, qids, Q, nq, ranks): ascending centroid
+    ids with their vectors and norms, ascending query ids with theirs,
+    and the (|Q|, #lists) rank matrix."""
+    import numpy as np
+
+    rows = {
+        int(r["vec_id"]): list(r["v"])
+        for r in emb.where(
+            F.col("vec_id").isin(CENTROID_IDS) | (F.col("vec_id") < num_queries)
+        )
+        .select("vec_id", as_double("embedding").alias("v"))
+        .collect()
+    }
+    cids = np.array(sorted(rows.keys() & set(CENTROID_IDS)), dtype=np.int64)
+    qids = np.array(sorted(i for i in rows if i < num_queries), dtype=np.int64)
+    C = np.array([rows[i] for i in cids], dtype=np.float64)
+    Q = np.array([rows[i] for i in qids], dtype=np.float64)
+    cnorms, nq = _fold_norm(C), _fold_norm(Q)
+    qcos = _fold_dot_matrix(Q, C) / (nq[:, None] * cnorms[None, :])
+    ranks = np.empty(qcos.shape, dtype=np.int64)
+    for i in range(len(qids)):
+        ranks[i, np.lexsort((cids, -qcos[i]))] = np.arange(1, len(cids) + 1)
+    return cids, C, cnorms, qids, Q, nq, ranks
+
+
+def _adaptive_nprobe(
+    emb: DataFrame, corpus_src: DataFrame, num_queries: int, nprobe: int, n_lists: int
+) -> int:
+    """Probe width for a filtered search.  A selective predicate thins
+    every list by ~the selectivity s, so a fixed nprobe sees ~s of its
+    usual candidates (VERDICT r9 #5: 0.8/5 mean hits at s~0.5).  Widen
+    by the inverse selectivity, integer-ceil so both engines compute
+    the identical width: min(#lists, ceil(nprobe * total / kept)).
+    Two scalar counts — the same pushed-filter scan the index pays
+    anyway; the scan stays a pre-filter."""
+    total = emb.where(F.col("vec_id") >= num_queries).count()
+    kept = corpus_src.where(F.col("vec_id") >= num_queries).count()
+    if kept == 0:
+        raise ValueError("corpus_pred filters out every corpus vector")
+    return min(n_lists, (nprobe * total + kept - 1) // kept)
+
+
 def ivf_topk(
     emb: DataFrame,
     num_queries: int = 10,
@@ -499,102 +553,62 @@ def ivf_topk(
     per_list_top1: bool = False,
 ) -> DataFrame:
     """Approximate top-k via an IVF-flat coarse index — the k-means-
-    family counterpart of `lsh_ann_topk`.  Index build collects the 16
-    centroid vectors to the driver (tiny, the classic broadcast-model
-    pattern); assignment scans the corpus ONCE with no shuffle; each
-    query probes its `nprobe` nearest lists, so only ~nprobe/16 of the
-    corpus is scored per query.
+    family counterpart of `lsh_ann_topk`.  Each query probes its
+    `nprobe` nearest lists, so only ~nprobe/16 of the corpus is scored
+    per query.
 
-    Scale shape: at 100 TB the index build samples/trains centroids
-    once and ships them in the task closure exactly as here; candidate
-    generation stays a broadcast hash join on list id.  Recall < 1 by
-    construction; `cosine_topk` is the exact baseline.
+    Shape: the query batch is routed on the driver — one collect of
+    the 16 centroid rows and the |Q| query rows, then `_probe_table`'s
+    (cos desc, centroid_id asc) probe ranks.  The corpus is scanned
+    ONCE in one Arrow pass (one mapInPandas, no join, no broadcast
+    relation): per batch the kernel assigns each row its list (argmax
+    first-win over ascending-cid centroids) and scores only the
+    (query, row) pairs whose list that query probes.  The routing
+    tables travel in the task closure (|Q| + 16 vectors).  At 100 TB
+    the index build samples/trains centroids once and ships them the
+    same way; the corpus is never shuffled beyond `fan_out`.  Recall
+    < 1 by construction; `cosine_topk` is the exact baseline.
 
-    Parity + perf: all cosines run through the fold-exact numpy
-    kernels above — Arrow-batched mapInPandas stages whose doubles are
-    bit-identical to both the interpreted expression folds
-    (`ivf_topk_hof`, the retained cross-check) and the DuckDB oracle's
-    list_reduce, while scoring whole row batches per dimension step.
-    This replaced 17 interpreted folds per corpus row (2.7 s at sf0.1)
-    with vectorized kernels at the same value hashes."""
+    Parity: every cosine runs through the fold-exact numpy kernels
+    above, bit-identical to the interpreted expression folds
+    (`ivf_topk_hof`, the retained cross-check) and the DuckDB
+    oracle's list_reduce, while scoring whole row batches per
+    dimension step."""
     import numpy as np
     import pandas as pd
 
-    cents = _centroids(emb)
-    cids = np.array([cid for cid, _ in cents], dtype=np.int64)
-    C = np.array([cv for _, cv in cents], dtype=np.float64)
-    cnorms = _fold_norm(C)
-
-    def assign_top1(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            V = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            nv = _fold_norm(V)
-            cos = _fold_dot_matrix(V, C) / (nv[:, None] * cnorms[None, :])
-            # argmax first-win on exact ties == (cos desc, centroid_id
-            # asc) because centroids are scanned in ascending-id order
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "v": pdf["v"],
-                    "nv": nv,
-                    "list_id": cids[np.argmax(cos, axis=1)],
-                }
-            )
-
-    def assign_probes(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            V = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            nv = _fold_norm(V)
-            cos = _fold_dot_matrix(V, C) / (nv[:, None] * cnorms[None, :])
-            qids, qvs, nqvs, lists = [], [], [], []
-            for i in range(len(pdf)):
-                order = np.lexsort((cids, -cos[i]))  # cos desc, cid asc
-                for li in order[:nprobe]:
-                    qids.append(pdf["vec_id"].iloc[i])
-                    qvs.append(pdf["v"].iloc[i])
-                    nqvs.append(nv[i])
-                    lists.append(cids[li])
-            yield pd.DataFrame(
-                {"query_id": qids, "qv": qvs, "nqv": nqvs, "list_id": lists}
-            )
-
-    v = emb.select("vec_id", as_double("embedding").alias("v"))
+    cids, C, cnorms, qids, Q, nq, ranks = _probe_table(emb, num_queries)
     # Filtered search: `corpus_pred` restricts the INDEXED side only —
     # queries and centroids always come from the full table, so the
     # index geometry is stable and the predicate lands in the parquet
-    # scan under the assignment stage (pre-filter, not post-filter:
-    # non-matching rows are never decoded, assigned, or scored).
-    #
-    # ADAPTIVE NPROBE (VERDICT r9 #5): a selective predicate thins
-    # every list by ~the selectivity s, so a fixed nprobe sees ~s of
-    # its usual candidates — the measured starvation (0.8/5 mean hits
-    # at s~0.5).  Widen the probe by the inverse selectivity,
-    # integer-ceil so both engines compute the identical width:
-    # nprobe' = min(#lists, ceil(nprobe * total / kept)).  Two scalar
-    # counts (the same pushed-filter scan the index pays anyway);
-    # the scan stays a pre-filter.
+    # scan under the kernel (pre-filter, not post-filter: non-matching
+    # rows are never decoded, assigned, or scored).
     corpus_src = emb.where(corpus_pred) if corpus_pred is not None else emb
     if corpus_pred is not None:
-        total = emb.where(F.col("vec_id") >= num_queries).count()
-        kept = corpus_src.where(F.col("vec_id") >= num_queries).count()
-        if kept == 0:
-            raise ValueError("corpus_pred filters out every corpus vector")
-        nprobe = min(len(cents), (nprobe * total + kept - 1) // kept)
+        nprobe = _adaptive_nprobe(emb, corpus_src, num_queries, nprobe, len(cids))
+    probes = ranks <= nprobe  # (|Q|, #lists): query i probes list j
+
+    def score(it):
+        for pdf in it:
+            if len(pdf) == 0:
+                continue
+            V = np.stack(pdf["v"].to_numpy()).astype(np.float64)
+            nv, a = _assign_lists(V, C, cnorms)
+            qi, ri = np.nonzero(probes[:, a])
+            out = {
+                "query_id": qids[qi],
+                "vec_id": pdf["vec_id"].to_numpy()[ri],
+                "cos_sim": _fold_dot_rows(Q[qi], V[ri]) / (nq[qi] * nv[ri]),
+            }
+            if per_list_top1:
+                out["list_id"] = cids[a[ri]]
+            yield pd.DataFrame(out)
+
     cv = corpus_src.select("vec_id", as_double("embedding").alias("v"))
-    corpus = fan_out(cv.where(F.col("vec_id") >= num_queries), "vec_id").mapInPandas(
-        assign_top1, schema="vec_id long, v array<double>, nv double, list_id long"
-    )
-    q = v.where(F.col("vec_id") < num_queries).mapInPandas(
-        assign_probes,
-        schema="query_id long, qv array<double>, nqv double, list_id long",
-    )
-    scored = _score_pairs(
-        corpus.join(F.broadcast(q), "list_id"),
-        carry=("list_id",) if per_list_top1 else (),
+    scored = fan_out(cv.where(F.col("vec_id") >= num_queries), "vec_id").mapInPandas(
+        score,
+        schema="query_id long, vec_id long, cos_sim double"
+        + (", list_id long" if per_list_top1 else ""),
     )
     if per_list_top1:
         # Diversified retrieval: keep only the best hit per probed
@@ -657,61 +671,35 @@ def ivf_scored_pair(
     query anyway, and at the production probe width the approx side
     re-scored ~nprobe/16 of it again (15/16 — near-total duplication).
     Here one Arrow kernel computes, per corpus row: its list
-    (argmax first-win over ascending-cid centroids == ivf_topk's
-    assign_top1), each query's probe rank of that list (driver-
-    precomputed (cos desc, cid asc) table — the same lexsort as
-    assign_probes), and each query's cosine in the expression fold's
-    exact operation order (`_fold_dot_matrix` — multiplication is
-    bitwise commutative, the per-dimension add order is identical to
-    `_score_pairs`).  approx = pairs with probe_rank <= nprobe', exact
-    = all pairs; both ranked by the shared (cos desc, vec_id asc)
-    window, so each side is bit-identical to the independent
-    ivf_topk/cosine_topk composition it replaces.  The scored relation
-    is pinned: the recall join's branches would otherwise re-run the
-    kernel per branch.
+    (`_assign_lists`, as ivf_topk), each query's probe rank of that
+    list (`_probe_table`, the driver-side routing ivf_topk uses), and
+    each query's cosine in the expression fold's exact operation order
+    (`_fold_dot_matrix` — multiplication is bitwise commutative, the
+    per-dimension add order is identical to `_fold_dot_rows`).
+    approx = pairs with probe_rank <= nprobe', exact = all pairs; both
+    ranked by the shared (cos desc, vec_id asc) window, so each side
+    is bit-identical to the independent ivf_topk/cosine_topk
+    composition it replaces.  The scored relation is pinned: the
+    recall join's branches would otherwise re-run the kernel per
+    branch.
 
     ``corpus_pred`` reproduces ivf_topk's filtered search exactly,
-    including the adaptive probe widening (same two counts, same
-    integer-ceil formula)."""
+    including the adaptive probe widening (`_adaptive_nprobe`)."""
     import numpy as np
     import pandas as pd
 
-    cents = _centroids(emb)
-    cids = np.array([cid for cid, _ in cents], dtype=np.int64)
-    C = np.array([cv for _, cv in cents], dtype=np.float64)
-    cnorms = _fold_norm(C)
-    qrows = sorted(
-        emb.where(F.col("vec_id") < num_queries)
-        .select("vec_id", as_double("embedding").alias("v"))
-        .collect(),
-        key=lambda r: r["vec_id"],
-    )
-    qids = np.array([int(r["vec_id"]) for r in qrows], dtype=np.int64)
-    Qm = np.array([list(r["v"]) for r in qrows], dtype=np.float64)
-    nq = _fold_norm(Qm)
-    qcos = _fold_dot_matrix(Qm, C) / (nq[:, None] * cnorms[None, :])
-    ranks = np.empty((len(qids), len(cids)), dtype=np.int64)
-    for i in range(len(qids)):
-        oc = np.lexsort((cids, -qcos[i]))
-        ranks[i, oc] = np.arange(1, len(cids) + 1)
-
+    cids, C, cnorms, qids, Qm, nq, ranks = _probe_table(emb, num_queries)
     corpus_src = emb.where(corpus_pred) if corpus_pred is not None else emb
     nprobe = nprobe_approx
     if corpus_pred is not None:
-        total = emb.where(F.col("vec_id") >= num_queries).count()
-        kept = corpus_src.where(F.col("vec_id") >= num_queries).count()
-        if kept == 0:
-            raise ValueError("corpus_pred filters out every corpus vector")
-        nprobe = min(len(cents), (nprobe_approx * total + kept - 1) // kept)
+        nprobe = _adaptive_nprobe(emb, corpus_src, num_queries, nprobe, len(cids))
 
     def f(it):
         for pdf in it:
             if len(pdf) == 0:
                 continue
             V = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            nv = _fold_norm(V)
-            ccos = _fold_dot_matrix(V, C) / (nv[:, None] * cnorms[None, :])
-            a = np.argmax(ccos, axis=1)
+            nv, a = _assign_lists(V, C, cnorms)
             pr = ranks[:, a]  # (n_queries, batch) probe_rank per pair
             qc = _fold_dot_matrix(V, Qm) / (nv[:, None] * nq[None, :])
             vid = pdf["vec_id"].to_numpy()
@@ -1348,17 +1336,9 @@ def closure_assignment(
             if len(pdf) == 0:
                 continue
             V = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            nv = _fold_norm(V)
-            cos = _fold_dot_matrix(V, C) / (nv[:, None] * cnorms[None, :])
-            # argmax first-win on exact ties == (cos desc, centroid_id
-            # asc): centroids are scanned in ascending-id order
+            nv, a = _assign_lists(V, C, cnorms)
             yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "v": pdf["v"],
-                    "nv": nv,
-                    "list_id": cids[np.argmax(cos, axis=1)],
-                }
+                {"vec_id": pdf["vec_id"], "v": pdf["v"], "nv": nv, "list_id": cids[a]}
             )
 
     return (

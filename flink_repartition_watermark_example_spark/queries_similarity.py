@@ -181,9 +181,11 @@ def _ivf_topk_oracle(nprobe: int) -> str:
     "ivf_ann_topk",
     _ivf_topk_oracle(SIM.NPROBE),
     doc="Approximate top-5 via an IVF-flat coarse index (16 sampled "
-    "centroids, 2-list probe): index build collects the centroids once "
-    "and ships them as literals, corpus assignment is a shuffle-free "
-    "map-side projection — the k-means-family scale path next to "
+    "centroids, 2-list probe): one collect fetches the centroids and "
+    "the 10 query rows, queries are routed to their lists on the "
+    "driver, and one shuffle-free Arrow pass assigns each corpus row "
+    "its list and scores only the probed pairs — the k-means-family "
+    "scale path next to "
     "lsh_ann_topk's hashing-family one.",
 )
 def q_ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -242,7 +244,7 @@ def q_ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "documents from source X / license Y'.  The predicate restricts "
     "the INDEXED side only (queries and centroids stay fixed, so the "
     "index geometry is stable) and is applied as a PRE-filter: the IN "
-    "list lands in the parquet scan below the assignment stage "
+    "list lands in the parquet scan below the scoring kernel "
     "(PushedFilters: In(label, ...)), so at 100 TB non-matching "
     "vectors are "
     "never decoded, assigned, or scored — unlike post-filtering a "
@@ -1303,8 +1305,9 @@ _HARDNEG_LO, _HARDNEG_HI = 6, 15
     "negatives are too easy; see contrastive_pairs for that shape).  "
     "Scale shape: the exact side is the broadcast brute-force "
     "baseline over 10 queries; the negative side reuses the IVF "
-    "machinery — candidate generation stays a broadcast hash join on "
-    "list_id, never all-pairs; both sides' cosines share the "
+    "machinery — queries are routed to their probed lists on the "
+    "driver and only those lists' rows are scored, never all-pairs; "
+    "both sides' cosines share the "
     "fold-exact kernels so the union hash-matches the oracle.",
 )
 def q_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -22,7 +22,8 @@ unbounded stream with bounded state — the same algebraic-partials
 argument the batch CMS (operators/sketch.py) makes, extended across
 micro-batches and restarts.  The HLL variant below maintains per-group
 distinct counts under the identical discipline (register-max union in
-place of counter sum).
+place of counter sum); its merged REGISTERS equal the one-shot
+sketch's, but not always its raw estimate (see ``read_hll_sketch``).
 """
 
 from __future__ import annotations
@@ -142,8 +143,8 @@ def estimate_from_sketch(
 # Same versioned-delta discipline, different algebra: HLL registers
 # merge by element-wise MAX (hll_union_agg), which is idempotent AND
 # commutative — so like the CMS counters, any batch split of the
-# stream unions to EXACTLY the sketch of the whole input, replays are
-# idempotent, and compaction is lossless.  Per-group state is one
+# stream unions to EXACTLY the registers of the whole input's sketch,
+# replays are idempotent, and compaction is lossless.  Per-group state is one
 # fixed-size binary sketch regardless of stream length: the shape that
 # answers "distinct users per key, ever" over an unbounded stream with
 # bounded state.
@@ -169,7 +170,14 @@ def hll_sketch_writer(sketch_path: str, key_col: str, group_col: str):
 
 def read_hll_sketch(spark: SparkSession, sketch_path: str, group_col: str) -> DataFrame:
     """The merged per-group sketch: register-max union of all committed
-    deltas — equals the one-shot sketch over everything they saw."""
+    deltas.  Its registers equal those of the one-shot sketch over
+    everything the deltas saw; its hll_sketch_estimate need not.  A
+    union result is estimated with the composite estimator, a directly
+    built sketch with HIP, and at small per-group cardinalities (~850
+    distinct keys) the two differ by a few counts.  Compare the two
+    sketches through unions (S+S, O+O, S+O give equal estimates when
+    the registers agree — tests/test_streaming_sketch.py), not by raw
+    estimate."""
     recover_compaction(sketch_path)
     vs = _versions(sketch_path)
     if not vs:

@@ -136,3 +136,33 @@ def test_pca_memo_distinguishes_derived_relations(spark, sf_dir):
     k_filt = _pca_key(filt, 64, 1024.0)
     assert k_full == k_full2
     assert k_full != k_filt
+
+
+def test_pca_memo_distinguishes_relations_past_the_plan_string_cut(
+    spark, tmp_path
+):
+    # Two relations over the SAME 30-column file that differ only in
+    # the expression for the last column: the plan's toString() cuts
+    # the projection list at spark.sql.debug.maxToStringFields (25), so
+    # a key built from that string served the second relation the
+    # first one's basis.  Reloading the same query must still hit.
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from flink_repartition_watermark_example_spark.operators.linalg import (
+        _pca_key,
+    )
+
+    path = str(tmp_path / "wide.parquet")
+    spark.createDataFrame(
+        pd.DataFrame({f"c{i}": [float(i), float(i + 1)] for i in range(30)})
+    ).coalesce(1).write.parquet(path)
+
+    def rel(last):
+        df = spark.read.parquet(path)
+        return df.select(*[F.col(f"c{i}") for i in range(29)], last.alias("c29"))
+
+    k_plus = _pca_key(rel(F.col("c29") + 1), 30, 1024.0)
+    k_times = _pca_key(rel(F.col("c29") * 2), 30, 1024.0)
+    assert k_plus != k_times
+    assert _pca_key(rel(F.col("c29") + 1), 30, 1024.0) == k_plus

@@ -52,6 +52,32 @@ def test_ivf_numpy_kernels_bit_identical_to_hof(spark, sf_dir):
     assert fast == hof
 
 
+@pytest.mark.parametrize("variant", ["plain", "corpus_pred", "per_list_top1"])
+def test_ivf_topk_runs_as_one_arrow_pass_without_join(spark, sf_dir, variant):
+    """ivf_topk routes the query batch on the driver and assigns +
+    scores the corpus in ONE mapInPandas: the executed plan has exactly
+    one MapInPandas node and no join of any kind (no broadcast of a
+    query-side relation, no second Python stage)."""
+    from pyspark.sql import functions as F
+
+    from tests.test_plan_audit import _physical_nodes
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    kw = {
+        "plain": {},
+        "corpus_pred": {"corpus_pred": F.col("label").isin(0, 2, 4, 6, 8)},
+        "per_list_top1": {"per_list_top1": True},
+    }[variant]
+    df = SIM.ivf_topk(emb, **kw)
+    assert df.collect()  # executes df's own plan: AQE's final plan
+    names = [
+        n.getClass().getSimpleName()
+        for n in _physical_nodes(df._jdf.queryExecution().executedPlan())
+    ]
+    assert names.count("MapInPandasExec") == 1, names
+    assert not [n for n in names if "Join" in n], names
+
+
 def test_ivf_assignment_is_deterministic(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     a = sorted(map(tuple, SIM.ivf_topk(emb).collect()))
